@@ -18,8 +18,10 @@ Scale notes:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
+
+from .textstats import const_expr
 
 
 def connected_components(
@@ -31,26 +33,19 @@ def connected_components(
     """(node, comp): comp = min node id reachable from node.
 
     Nodes are the union of both edge endpoints; isolated nodes (absent
-    from `edges`) are absent from the result by construction.
+    from `edges`) are absent from the result by construction. Endpoint
+    columns of different types are cast to their common type first
+    (int and bigint -> bigint); same-typed endpoints get no cast.
     """
+    edges = with_common_endpoint_type(edges, a_col, b_col)
+    c = _cc_columns(a_col, b_col)
     # both edge directions from ONE pass over `edges`: the former
     # unionByName of two selects restated the whole upstream pair
     # pipeline (LSH banding, signature aggregation) once per branch —
     # the explode derives (a->b, b->a) per input row map-side, so the
     # edge subtree is evaluated exactly once (r7; values identical)
     adj = (
-        edges.select(
-            F.explode(
-                F.array(
-                    F.struct(
-                        F.col(a_col).alias("src"), F.col(b_col).alias("dst")
-                    ),
-                    F.struct(
-                        F.col(b_col).alias("src"), F.col(a_col).alias("dst")
-                    ),
-                )
-            ).alias("e")
-        )
+        edges.select(c["directions"])
         .select("e.src", "e.dst")
         .distinct()
         .localCheckpoint(eager=True)
@@ -59,19 +54,13 @@ def connected_components(
     # adjacency — the first round's checkpoint materializes it, saving
     # a whole driver job (r7; these are all sub-second jobs whose cost
     # is scheduling, not data)
-    labels = (
-        adj.select(F.col("src").alias("node"), F.col("src").alias("comp"))
-        .groupBy("node")
-        .agg(F.min("comp").alias("comp"))
-    )
-
-    from pyspark.sql import Observation
+    labels = adj.select(*c["init"]).groupBy("node").agg(c["min_comp"])
 
     for _ in range(max_iter):
         neigh = (
             adj.join(labels, adj["dst"] == labels["node"])
             .groupBy("src")
-            .agg(F.min("comp").alias("ncomp"))
+            .agg(c["min_ncomp"])
         )
         # convergence detection is folded into the label update AND
         # into the checkpoint job itself: an Observation on the frame
@@ -85,16 +74,8 @@ def connected_components(
         obs = Observation()
         new_labels = (
             labels.join(neigh, labels["node"] == neigh["src"], "left")
-            .select(
-                "node",
-                F.least(
-                    F.col("comp"), F.coalesce(F.col("ncomp"), F.col("comp"))
-                ).alias("comp"),
-                (
-                    F.coalesce(F.col("ncomp"), F.col("comp")) < F.col("comp")
-                ).alias("_changed"),
-            )
-            .observe(obs, F.sum(F.col("_changed").cast("long")).alias("n"))
+            .select(*c["update"])
+            .observe(obs, c["n_changed"])
             .localCheckpoint(eager=True)
         )
         labels = new_labels.drop("_changed")
@@ -102,6 +83,44 @@ def connected_components(
         if not obs.get["n"]:
             break
     return labels
+
+
+def with_common_endpoint_type(
+    edges: DataFrame, a_col: str, b_col: str
+) -> DataFrame:
+    """``edges`` with both endpoint columns cast to their common type
+    (the type Spark widens them to, e.g. int and bigint -> bigint);
+    ``edges`` itself when the types already match."""
+    types = {f.name: f.dataType for f in edges.schema.fields}
+    if types[a_col] == types[b_col]:
+        return edges
+    common = edges.select(F.array(a_col, b_col)).schema[0].dataType
+    return edges.withColumns(
+        {c: F.col(c).cast(common.elementType) for c in (a_col, b_col)}
+    )
+
+
+@const_expr
+def _cc_columns(a_col: str, b_col: str) -> dict:
+    """The constant expressions of :func:`connected_components`."""
+    ncomp = F.coalesce(F.col("ncomp"), F.col("comp"))
+    return {
+        "directions": F.explode(
+            F.array(
+                F.struct(F.col(a_col).alias("src"), F.col(b_col).alias("dst")),
+                F.struct(F.col(b_col).alias("src"), F.col(a_col).alias("dst")),
+            )
+        ).alias("e"),
+        "init": (F.col("src").alias("node"), F.col("src").alias("comp")),
+        "min_comp": F.min("comp").alias("comp"),
+        "min_ncomp": F.min("comp").alias("ncomp"),
+        "update": (
+            F.col("node"),
+            F.least(F.col("comp"), ncomp).alias("comp"),
+            (ncomp < F.col("comp")).alias("_changed"),
+        ),
+        "n_changed": F.sum(F.col("_changed").cast("long")).alias("n"),
+    }
 
 
 def dedup_groups(

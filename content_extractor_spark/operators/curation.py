@@ -27,6 +27,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .textstats import _word_ngrams, const_expr, let_bound
+
 # dialect-portable patterns (same semantics in Java regex and RE2)
 EMAIL_RE = r"[A-Za-z0-9.+_-]+@[A-Za-z0-9-]+\.[A-Za-z0-9.-]+"
 PHONE_RE = r"\+?[0-9][0-9 ()/-]{6,}[0-9]"
@@ -55,8 +57,6 @@ def _iban_valid(cand: Column) -> Column:
     character code are let-bound — free in the fold lambda they would
     re-evaluate the concat/substring chain (over an already
     regexp-normalized candidate) once per CHARACTER per reference."""
-    from .textstats import let_bound
-
     def fold(r):
         def step(acc, i):
             return let_bound(
@@ -82,8 +82,6 @@ def _luhn_valid(cand: Column) -> Column:
     """ISO/IEC 7812 Luhn checksum over a candidate's digits — pure
     Catalyst (reverse + transform + aggregate), no UDF. Digits string
     and per-position digit let-bound (same rule as _iban_valid)."""
-    from .textstats import let_bound
-
     def fold(digits):
         def val(i):
             def dval(d):
@@ -122,13 +120,16 @@ def pii_scrub(
     All steps are Catalyst expressions — both checksums run as
     per-candidate transform/aggregate folds, not UDFs.
     """
+    return df.select("*", *_pii_columns(text_col, out_col))
+
+
+@const_expr
+def _pii_columns(text_col: str, out_col: str):
     t = F.col(text_col)
     n_emails = F.size(F.regexp_extract_all(t, F.lit(EMAIL_RE), F.lit(0)))
     step1 = F.regexp_replace(t, EMAIL_RE, "<EMAIL>")
 
     def _iban_ok(cand):
-        from .textstats import let_bound
-
         # norm let-bound: referenced free it would re-run the
         # separator-stripping regexp once per reference (and once per
         # checksum fold step via _iban_valid's own binding)
@@ -164,8 +165,7 @@ def pii_scrub(
     )
     n_phones = F.size(F.regexp_extract_all(step3, F.lit(PHONE_RE), F.lit(0)))
     step4 = F.regexp_replace(step3, PHONE_RE, "<PHONE>")
-    return df.select(
-        "*",
+    return (
         n_emails.cast("int").alias("n_emails"),
         n_ibans.cast("int").alias("n_ibans"),
         n_ips.cast("int").alias("n_ips"),
@@ -173,18 +173,6 @@ def pii_scrub(
         n_phones.cast("int").alias("n_phones"),
         step4.alias(out_col),
     )
-
-
-def _shingle_col(text: Column, n: int) -> Column:
-    """Word n-grams for shingle joins — deliberately NOT array_distinct:
-    per-doc duplicate shingles cannot change decontaminate's output (the
-    benchmark side is .distinct()ed after explode; doc-side hits are
-    .distinct()ed on the id), and array_distinct on a string array is
-    the measured hot spot (sf1.0 bench side: 3.5s with it, 0.6s
-    without — it is O(n²) with per-element UTF8String comparisons)."""
-    from .textstats import _word_ngrams
-
-    return _word_ngrams(text, n)
 
 
 def decontaminate(
@@ -201,11 +189,17 @@ def decontaminate(
     must be dropped before training. Benchmark shingles are distinct
     and small → broadcast semi join; doc shingles explode map-side.
     """
+    # word n-grams deliberately NOT array_distinct: per-doc duplicate
+    # shingles cannot change the output (the benchmark side is
+    # .distinct()ed after explode; doc-side hits are .distinct()ed on
+    # the id), and array_distinct on a string array is the measured hot
+    # spot (sf1.0 bench side: 3.5s with it, 0.6s without — it is O(n²)
+    # with per-element UTF8String comparisons)
     doc_sh = docs.select(
-        F.col(id_col), F.explode(_shingle_col(F.col(text_col), n)).alias("_sh")
+        F.col(id_col), F.explode(_word_ngrams(text_col, n)).alias("_sh")
     )
     bench_sh = benchmark.select(
-        F.explode(_shingle_col(F.col(text_col), n)).alias("_sh")
+        F.explode(_word_ngrams(text_col, n)).alias("_sh")
     ).distinct()
     hits = (
         doc_sh.join(F.broadcast(bench_sh), "_sh", "left_semi")
@@ -273,13 +267,15 @@ def train_val_split(
 ) -> DataFrame:
     """Deterministic, engine-portable split by md5(id) — stable across
     reruns, engines and cluster sizes (never rand(), never a sample)."""
+    return df.withColumn("split", _split_column(id_col, val_pct))
+
+
+@const_expr
+def _split_column(id_col: str, val_pct: int) -> Column:
     h = F.conv(
         F.substring(F.md5(F.col(id_col).cast("string")), 1, 14), 16, 10
     ).cast("bigint")
-    return df.withColumn(
-        "split",
-        F.when(h % 100 < 100 - val_pct, F.lit("train")).otherwise(F.lit("val")),
-    )
+    return F.when(h % 100 < 100 - val_pct, F.lit("train")).otherwise(F.lit("val"))
 
 
 def stratified_sample(
@@ -336,6 +332,11 @@ def normalize_text(
     codegen, zero shuffle; every pattern is dialect-portable so the
     DuckDB oracle reproduces the output byte-for-byte.
     """
+    return df.withColumn(out_col, _normalized(text_col, lowercase))
+
+
+@const_expr
+def _normalized(text_col: str, lowercase: bool) -> Column:
     c = F.col(text_col)
     c = F.regexp_replace(c, _CURLY_SINGLE, "\'")
     c = F.regexp_replace(c, _CURLY_DOUBLE, '"')
@@ -345,7 +346,7 @@ def normalize_text(
     c = F.trim(F.regexp_replace(c, r"\s+", " "))
     if lowercase:
         c = F.lower(c)
-    return df.withColumn(out_col, c)
+    return c
 
 
 def snapshot_diff(
@@ -439,8 +440,6 @@ def chunk_documents(
     newlines never create phantom tokens); NULL or whitespace-only
     documents produce NO chunks.
     """
-    from .textstats import let_bound
-
     toks = F.filter(
         F.split(F.coalesce(F.col(text_col), F.lit("")), r"\s+"),
         lambda x: x != "",

@@ -6,8 +6,8 @@ Jaccard — all as Catalyst-only plans over a text column, no Python.
 
 Portability contract: every hash here is derived from md5 so the
 DuckDB oracle can compute the *same* values (Spark's xxhash64/hash are
-not available in DuckDB). `PORTABLE_HASH_SPARK/DUCK` give the shared
-56-bit integer hash in each dialect.
+not available in DuckDB). :func:`portable_hash` is the shared 56-bit
+integer hash; the oracles write its DuckDB form inline.
 
 Scale notes:
   * exact dedup: one shuffle on the digest (uniform) — first-writer-
@@ -27,14 +27,12 @@ from typing import Optional
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .textstats import const_expr, let_bound
+
 # 56-bit portable hash (no sign issues), identical in DuckDB via
 # ('0x' || substr(md5(x),1,14))::BIGINT
 def portable_hash(col: Column) -> Column:
     return F.conv(F.substring(F.md5(col), 1, 14), 16, 10).cast("bigint")
-
-
-def portable_hash_duck(expr: str) -> str:
-    return f"(('0x' || substr(md5({expr}), 1, 14))::BIGINT)"
 
 
 # -- exact dedup -----------------------------------------------------------------
@@ -151,10 +149,9 @@ def repeated_window_spans(
 # -- shingling -------------------------------------------------------------------
 
 
+@const_expr
 def word_shingles(text_col: str = "text", k: int = 3) -> Column:
     """Distinct k-word shingles of lower(text), array<string>."""
-    from .textstats import let_bound
-
     toks = F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
 
     def gen(t):
@@ -198,8 +195,6 @@ def minhash_signature(text_col: str = "text", num_perm: int = 16,
         raise ValueError(
             "num_perm <= 64: (2j+1)*hash must stay within int64"
         )
-    from .textstats import let_bound
-
     base = F.transform(word_shingles(text_col, k), lambda s: portable_hash(s))
     # let_bound: a free-variable `base` inside the permutation lambda
     # would recompute the md5 of every shingle once per permutation
@@ -219,9 +214,12 @@ def minhash_signature(text_col: str = "text", num_perm: int = 16,
     )
 
 
-def minhash_bands(sig_col: Column, num_bands: int = 4,
+@const_expr
+def minhash_bands(sig_col: str = "sig", num_bands: int = 4,
                   rows_per_band: int = 4) -> Column:
-    """Band hashes: array of (hash of the band's minhash slice)."""
+    """Band hashes of the signature column ``sig_col``: array of (hash
+    of the band's minhash slice)."""
+    sig = F.col(sig_col)
     return F.transform(
         F.sequence(F.lit(0), F.lit(num_bands - 1)),
         lambda b: F.conv(
@@ -230,7 +228,7 @@ def minhash_bands(sig_col: Column, num_bands: int = 4,
                     F.concat_ws(
                         ",",
                         F.transform(
-                            F.slice(sig_col, b * rows_per_band + 1, rows_per_band),
+                            F.slice(sig, b * rows_per_band + 1, rows_per_band),
                             lambda x: x.cast("string"),
                         ),
                     )
@@ -263,20 +261,27 @@ def minhash_signatures_df(
         raise ValueError(
             "num_perm <= 64: (2j+1)*hash must stay within int64"
         )
-    ex = df.select(
-        F.col(id_col).alias("id"),
-        F.explode(word_shingles(text_col, k)).alias("s"),
-    )
+    ident, shingles, aggs, sig = _minhash_columns(id_col, text_col, num_perm, k)
+    return df.select(ident, shingles).groupBy("id").agg(*aggs).select("id", sig)
+
+
+@const_expr
+def _minhash_columns(id_col: str, text_col: str, num_perm: int, k: int):
+    """``(id, exploded shingles, num_perm MIN aggregates, signature
+    array)`` of :func:`minhash_signatures_df`."""
     h = portable_hash(F.col("s"))
-    aggs = [
+    aggs = tuple(
         F.min(
             ((F.lit(2 * j + 1) * h) + F.lit(j * MINHASH_ADD)) % F.lit(MINHASH_PRIME)
         ).alias(f"mh{j}")
         for j in range(num_perm)
-    ]
-    sigs = ex.groupBy("id").agg(*aggs)
-    return sigs.select(
-        "id", F.array(*[F.col(f"mh{j}") for j in range(num_perm)]).alias("sig")
+    )
+    sig = F.array(*[F.col(f"mh{j}") for j in range(num_perm)]).alias("sig")
+    return (
+        F.col(id_col).alias("id"),
+        F.explode(word_shingles(text_col, k)).alias("s"),
+        aggs,
+        sig,
     )
 
 
@@ -303,34 +308,46 @@ def minhash_lsh_pairs(
     to keep the fully lazy plan (pushdown through the signature
     subtree) for library composition.
     """
-    rows = num_perm // num_bands
+    c = _lsh_columns(num_bands, num_perm // num_bands, max_bucket)
     sigs = minhash_signatures_df(df, text_col, id_col, num_perm)
-    banded = sigs.select(
-        F.col("id"),
-        F.posexplode(
-            minhash_bands(F.col("sig"), num_bands, rows)
-        ).alias("band_idx", "band_hash"),
-    )
-    w = Window.partitionBy("band_idx", "band_hash").orderBy("id")
-    banded = banded.withColumn("_rn", F.row_number().over(w)).where(
-        F.col("_rn") <= max_bucket
+    banded = (
+        sigs.select(F.col("id"), c["bands"])
+        .withColumn("_rn", c["rank"])
+        .where(c["in_cap"])
     )
     if checkpoint_banded:
         banded = banded.localCheckpoint(eager=True)
-    a = banded.select(
-        F.col("band_idx").alias("bi"), F.col("band_hash").alias("bh"),
-        F.col("id").alias("a"),
-    )
-    b = banded.select(
-        F.col("band_idx").alias("bi"), F.col("band_hash").alias("bh"),
-        F.col("id").alias("b"),
-    )
+    a = banded.select(*c["side_a"])
+    b = banded.select(*c["side_b"])
     return (
         a.join(b, ["bi", "bh"])
-        .where(F.col("a") < F.col("b"))
+        .where(c["ordered"])
         .select("a", "b")
         .distinct()
     )
+
+
+@const_expr
+def _lsh_columns(num_bands: int, rows: int, max_bucket: int) -> dict:
+    """The constant expressions of :func:`minhash_lsh_pairs`."""
+    w = Window.partitionBy("band_idx", "band_hash").orderBy("id")
+
+    def side(name):
+        return (
+            F.col("band_idx").alias("bi"), F.col("band_hash").alias("bh"),
+            F.col("id").alias(name),
+        )
+
+    return {
+        "bands": F.posexplode(minhash_bands("sig", num_bands, rows)).alias(
+            "band_idx", "band_hash"
+        ),
+        "rank": F.row_number().over(w),
+        "in_cap": F.col("_rn") <= max_bucket,
+        "side_a": side("a"),
+        "side_b": side("b"),
+        "ordered": F.col("a") < F.col("b"),
+    }
 
 
 # -- SimHash ---------------------------------------------------------------------
@@ -352,8 +369,6 @@ def simhash(text_col: str = "text", bits: int = 16) -> Column:
     """
     if bits > 64:
         raise ValueError("simhash signatures are int64: bits <= 64")
-    from .textstats import let_bound
-
     toks = F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
     tok_hashes = F.transform(toks, lambda t: portable_hash(t))
 

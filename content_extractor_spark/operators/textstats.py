@@ -12,6 +12,9 @@ DuckDB oracle can check it value-for-value (driver contract).
 
 from __future__ import annotations
 
+import functools
+import inspect
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -181,6 +184,51 @@ def let_bound(col: Column, fn) -> Column:
     return F.transform(F.array(col), fn)[0]
 
 
+# py4j gateway -> {(builder, arguments, their types): built Columns};
+# holds the current gateway's memo only
+_CONST_EXPRS: dict = {}
+
+
+def const_expr(builder):
+    """Memoize ``builder`` once per JVM: later calls with equal
+    arguments get the very Columns the first call built.
+
+    For builders whose Columns depend only on their hashable arguments
+    (column names, constants), never on a DataFrame. Each Column
+    operator costs a few py4j round trips, and the curation funnel's
+    constant trees have thousands of them: rebuilt on every call they
+    took seconds of driver time in which no Spark job ran. A Column is
+    an unresolved expression that no DataFrame or session owns, so one
+    tree serves every later plan in the JVM that built it; the memo
+    starts over when the py4j gateway (the JVM) changes. Plans and
+    values are the same as with fresh trees; only the lambda-variable
+    names no longer change from call to call. Two threads that miss
+    at once both build, and the first result stored wins.
+    """
+    signature = inspect.signature(builder)
+
+    @functools.wraps(builder)
+    def cached(*args, **kwargs):
+        from pyspark import SparkContext
+
+        gateway = SparkContext._gateway
+        memo = _CONST_EXPRS.get(gateway)
+        if memo is None:
+            _CONST_EXPRS.clear()
+            memo = _CONST_EXPRS.setdefault(gateway, {})
+        bound = signature.bind(*args, **kwargs)
+        bound.apply_defaults()
+        values = bound.args + tuple(bound.kwargs.items())
+        # types too: 1 == 1.0 == True, but each builds another literal
+        key = (builder, values, tuple(map(type, values)))
+        built = memo.get(key)
+        if built is None:
+            built = memo.setdefault(key, builder(*bound.args, **bound.kwargs))
+        return built
+
+    return cached
+
+
 def _distinct_tokens(text: Column) -> Column:
     """Lowercased whitespace tokens, de-duplicated.
 
@@ -198,22 +246,6 @@ def _distinct_tokens(text: Column) -> Column:
 def _marker_hits_tokens(toks: Column, words) -> Column:
     """Presence count of marker words in a pre-tokenized document."""
     return F.size(F.array_intersect(toks, F.array(*[F.lit(w) for w in words])))
-
-
-def _marker_hits(text: Column, words) -> Column:
-    """How many of the marker words appear as whole tokens in text."""
-    return _marker_hits_tokens(_distinct_tokens(text), words)
-
-
-def _trigram_hits(win: Column, grams) -> Column:
-    """Presence count of DISTINCT profile trigrams in a pre-lowered
-    text window — plain ``contains`` calls (no regex, no higher-order
-    functions, so the projection stays inside whole-stage codegen)."""
-    h = None
-    for g in grams:
-        c = F.contains(win, F.lit(g)).cast("int")
-        h = c if h is None else h + c
-    return h
 
 
 def _window_trigrams(win: Column) -> Column:
@@ -383,25 +415,39 @@ def with_detected_language(
     stays inside one WholeStageCodegen span (guide §4.1 — built-ins
     only; §1.2 — fix per-row work after plan shape).
     """
-    text = F.col(text_col)
-    tmp = [f"_li_{c}" for c in ("nscript", "toks", "win", "best")]
-    df1 = df.withColumns(
-        {
-            tmp[0]: _n_script_expr(text),
-            tmp[1]: _distinct_tokens(text),
-            tmp[2]: F.lower(F.substring(text, 1, TRIGRAM_WINDOW)),
-        }
+    shared, best, lang = _language_columns(text_col)
+    return (
+        df.withColumns(dict(shared))
+        .withColumn(_LI_TMP[3], best)
+        .withColumn(out_col, lang)
+        .drop(*_LI_TMP)
     )
-    df2 = df1.withColumn(tmp[3], _marker_best_expr(F.col(tmp[1])))
-    best = F.col(tmp[3])
+
+
+_LI_TMP = tuple(f"_li_{c}" for c in ("nscript", "toks", "win", "best"))
+
+
+@const_expr
+def _language_columns(text_col: str):
+    """The three projection layers of :func:`with_detected_language`:
+    ``(shared subexpressions as (name, Column) pairs, marker argmax,
+    language code)``."""
+    text = F.col(text_col)
+    nscript, toks, win, best = _LI_TMP
+    shared = (
+        (nscript, _n_script_expr(text)),
+        (toks, _distinct_tokens(text)),
+        (win, F.lower(F.substring(text, 1, TRIGRAM_WINDOW))),
+    )
+    argmax = F.col(best)
     lang = F.when(
-        F.col(tmp[0]) >= SCRIPT_MIN_CHARS, _script_lang_expr(text)
+        F.col(nscript) >= SCRIPT_MIN_CHARS, _script_lang_expr(text)
     ).otherwise(
-        F.when(best["h"] >= 1, best["lang"]).otherwise(
-            _trigram_lang_expr(F.col(tmp[2]))
+        F.when(argmax["h"] >= 1, argmax["lang"]).otherwise(
+            _trigram_lang_expr(F.col(win))
         )
     )
-    return df2.withColumn(out_col, lang).drop(*tmp)
+    return shared, _marker_best_expr(F.col(toks)), lang
 
 
 def token_count_ws(text_col: str = "text") -> Column:
@@ -422,6 +468,11 @@ def quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
     style): favor mid-length documents with sane punctuation density
     and a healthy stopword ratio.
     """
+    return df.select("*", *_quality_columns(text_col))
+
+
+@const_expr
+def _quality_columns(text_col: str):
     t = F.col(text_col)
     n_chars = F.length(t)
     n_tokens = token_count_ws(text_col)
@@ -446,8 +497,7 @@ def quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
         * F.when(punct_ratio <= 0.2, F.lit(1.0)).otherwise(F.lit(0.5))
         * F.when(stop_hits >= 1, F.lit(1.0)).otherwise(F.lit(0.3))
     )
-    return df.select(
-        "*",
+    return (
         n_chars.alias("q_chars"),
         n_tokens.cast("int").alias("q_tokens"),
         F.round(mean_tok_len, 4).alias("q_mean_token_len"),
@@ -486,26 +536,34 @@ def linear_quality_score(
     happens offline (this repo ships the SCORING path, which is the
     part that must scale).
     """
-    d = len(weights)
-    if d == 0:
+    if len(weights) == 0:
         raise ValueError("weights must be non-empty")
+    return df.withColumn(
+        out_col,
+        _linear_score(tuple(float(x) for x in weights), float(bias), text_col),
+    )
+
+
+@const_expr
+def _linear_score(weights: tuple, bias: float, text_col: str) -> Column:
+    d = len(weights)
     toks = F.split(F.lower(F.col(text_col)), TOKEN_SPLIT_RE)
-    warr = F.array(*[F.lit(float(x)) for x in weights])
+    warr = F.array(*[F.lit(x) for x in weights])
     z = F.aggregate(
         toks,
-        F.lit(float(bias)),
+        F.lit(bias),
         lambda acc, t: acc
         + F.element_at(
             warr, (F.crc32(F.encode(t, "utf-8")) % d).cast("int") + 1
         ),
     )
-    score = F.lit(1.0) / (F.lit(1.0) + F.exp(-z))
-    return df.withColumn(out_col, score)
+    return F.lit(1.0) / (F.lit(1.0) + F.exp(-z))
 
 
-def _word_ngrams(text: Column, n: int) -> Column:
+@const_expr
+def _word_ngrams(text_col: str, n: int) -> Column:
     """Full word n-grams (lowercased, whitespace tokens); [] if < n words."""
-    toks = F.split(F.lower(F.trim(text)), TOKEN_SPLIT_RE)
+    toks = F.split(F.lower(F.trim(F.col(text_col))), TOKEN_SPLIT_RE)
 
     def gen(t):
         cnt = F.size(t) - (n - 1)
@@ -540,11 +598,20 @@ def repetition_features(
     both shuffle on the document id (uniform), with map-side partial
     aggregation; no Python. Documents shorter than n words get zeros.
     """
+    ngrams, count, per_doc_aggs, out = _repetition_columns(id_col, text_col, n)
     ident = F.col(id_col)
-    ng = df.select(ident, F.explode(_word_ngrams(F.col(text_col), n)).alias("_ng"))
-    counts = ng.groupBy(id_col, "_ng").agg(F.count("*").alias("_c"))
+    ng = df.select(ident, ngrams)
+    counts = ng.groupBy(id_col, "_ng").agg(count)
+    per_doc = counts.groupBy(id_col).agg(*per_doc_aggs)
+    return df.select(ident).join(per_doc, id_col, "left").select(*out)
+
+
+@const_expr
+def _repetition_columns(id_col: str, text_col: str, n: int):
+    """``(exploded n-grams, per-(doc, n-gram) count, per-doc aggregates,
+    output projection)`` of :func:`repetition_features`."""
     mass = F.col("_c") * F.length(F.col("_ng"))
-    per_doc = counts.groupBy(id_col).agg(
+    per_doc_aggs = (
         F.sum("_c").cast("int").alias("n_ngrams"),
         F.round(
             F.sum(F.when(F.col("_c") > 1, mass).otherwise(F.lit(0))).cast("double")
@@ -555,19 +622,21 @@ def repetition_features(
             "top_ngram_char_frac"
         ),
     )
+    out = (
+        F.col(id_col),
+        F.coalesce(F.col("n_ngrams"), F.lit(0)).alias("n_ngrams"),
+        F.coalesce(F.col("dup_ngram_char_frac"), F.lit(0.0)).alias(
+            "dup_ngram_char_frac"
+        ),
+        F.coalesce(F.col("top_ngram_char_frac"), F.lit(0.0)).alias(
+            "top_ngram_char_frac"
+        ),
+    )
     return (
-        df.select(ident)
-        .join(per_doc, id_col, "left")
-        .select(
-            id_col,
-            F.coalesce(F.col("n_ngrams"), F.lit(0)).alias("n_ngrams"),
-            F.coalesce(F.col("dup_ngram_char_frac"), F.lit(0.0)).alias(
-                "dup_ngram_char_frac"
-            ),
-            F.coalesce(F.col("top_ngram_char_frac"), F.lit(0.0)).alias(
-                "top_ngram_char_frac"
-            ),
-        )
+        F.explode(_word_ngrams(text_col, n)).alias("_ng"),
+        F.count("*").alias("_c"),
+        per_doc_aggs,
+        out,
     )
 
 
@@ -939,6 +1008,11 @@ def line_features(df: DataFrame, text_col: str = "text") -> DataFrame:
     codegen-fused, zero shuffle; dialect-portable so a DuckDB oracle
     reproduces every value (driver query text_features).
     """
+    return df.select("*", *_line_columns(text_col))
+
+
+@const_expr
+def _line_columns(text_col: str):
     lines = F.filter(
         F.transform(
             F.split(F.coalesce(F.col(text_col), F.lit("")), "\n"),
@@ -957,8 +1031,7 @@ def line_features(df: DataFrame, text_col: str = "text") -> DataFrame:
         lines, F.lit(0), lambda acc, x: acc + F.length(x)
     )
     nz = F.when(n > 0, n.cast("double"))
-    return df.select(
-        "*",
+    return (
         n.alias("n_lines"),
         F.coalesce(F.round(n_bullet / nz, 4), F.lit(0.0)).alias(
             "bullet_line_frac"

@@ -44,14 +44,32 @@ def get_spark(
         .config("spark.sql.parquet.columnarReaderBatchSize", "512")
         .config("spark.sql.files.maxPartitionBytes", "128m")
         .config("spark.sql.autoBroadcastJoinThreshold", "64m")
+        # generated classes: a curation-funnel call needs ~145 and a
+        # recrawl extraction call ~90 (perfbench inputs, measured on a
+        # 4-core host). At the default 100 entries the LRU cache evicted
+        # them between calls, so every warm funnel call recompiled ~130
+        # with Janino; 1000 holds both working sets four times over and
+        # a warm call compiles nothing.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         # single-JVM local mode does all executors' work in the driver
         # heap; 8g GC-thrashes at local[32] with multi-KB string columns
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "20g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEM") or default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def default_driver_memory() -> str:
+    """20g, or three quarters of the host's physical memory when that
+    is less: a heap larger than the host lets the JVM grow until the
+    kernel's OOM killer ends it."""
+    total_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    return f"{min(20 * 1024, total_mb * 3 // 4)}m"
 
 
 def _default_shuffle_partitions(master: str) -> int:

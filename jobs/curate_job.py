@@ -29,9 +29,18 @@ Design for 10^12 documents:
     per-stage count() actions.
   * the map-only stages (language ID, quality, repetition inputs,
     normalization, scrubbing, split) fuse into the scan's whole-stage
-    codegen; the only wide shuffles are the exact-dedup digest window,
-    the LSH band join, and the CC label propagation — all keyed on
-    uniform hashes.
+    codegen. The wide shuffles are the exact-dedup digest window, the
+    repetition n-gram aggregates and their join-back, the LSH band
+    join, the CC label propagation, and the near-dup and
+    decontamination join-backs — all keyed on uniform hashes or doc
+    ids. With the eager checkpoints (LSH bands, CC adjacency, one per
+    CC round) a call is several dozen Spark jobs: 42 on the
+    500-document perfbench curate_funnel input.
+  * a warm call pays only for its data: the constant expression trees
+    are built once per JVM (``textstats.const_expr``) and
+    ``session.get_spark`` sizes the codegen cache to hold a call's
+    generated classes, so a repeated call neither rebuilds Columns
+    through py4j nor recompiles them.
   * exact dedup keeps the FIRST surviving row per content digest:
     the digest window orders early-dropped rows last, so a
     quality-rejected copy never shadows a good one.
@@ -53,6 +62,8 @@ import sys
 sys.path.insert(
     0, os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 )
+
+from content_extractor_spark.operators.textstats import const_expr  # noqa: E402
 
 
 def _env(name: str, cast=str):
@@ -139,14 +150,13 @@ DROP_REASONS = (
 def flag_documents(docs, cfg, benchmark=None):
     """Assign every row its priority-ordered `drop_reason` (NULL =
     keep). Single linear DAG except the near-dup branch, which runs
-    only over rows surviving the earlier stages.
+    only over rows surviving the earlier stages. The expression trees
+    are built once per JVM (``_flag_columns``), so a repeated call
+    pays py4j round trips only for its DataFrame operations.
 
     Returns ``(flagged_df, cached_df)`` — the caller must unpersist
     ``cached_df`` (the pre-near-dup intermediate this function caches)
     after its terminal action."""
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
     from content_extractor_spark.operators.components import (
         connected_components,
     )
@@ -197,40 +207,17 @@ def flag_documents(docs, cfg, benchmark=None):
     ).select("doc_id", "dup_ngram_char_frac")
     df = df.join(rep, "doc_id")
 
-    early = F.when(
-        ~F.col("lang_detected").isin(langs) if langs else F.lit(False),
-        F.lit("lang"),
-    ).when(
-        F.col("q_score") < cfg.min_quality, F.lit("quality")
+    c = _flag_columns(
+        tuple(langs), cfg.min_quality,
+        cfg.ml_min_score if ml is not None else None,
+        cfg.max_dup_frac, cfg.max_bullet_frac, cfg.max_ellipsis_frac,
     )
-    if ml is not None:
-        early = early.when(
-            F.col("ml_q_score") < cfg.ml_min_score, F.lit("ml_quality")
-        )
-    early = early.when(
-        F.col("dup_ngram_char_frac") > cfg.max_dup_frac, F.lit("repetition")
-    ).when(
-        # Gopher format caps: mostly-bulleted or ellipsis-heavy pages
-        # are list/teaser chrome, not prose
-        (F.col("bullet_line_frac") > cfg.max_bullet_frac)
-        | (F.col("ellipsis_line_frac") > cfg.max_ellipsis_frac),
-        F.lit("format"),
-    )
-    df = df.withColumn("_early", early)
+    df = df.withColumn("_early", c["early"])
 
     # exact dedup: first SURVIVING row per digest wins (early-dropped
     # copies sort last, so they never shadow a keepable one)
-    w = Window.partitionBy(F.md5(F.col("text"))).orderBy(
-        F.col("_early").isNotNull().cast("int").asc(), F.col("doc_id").asc()
-    )
-    df = df.withColumn("_rn", F.row_number().over(w))
-    df = df.withColumn(
-        "drop_reason",
-        F.coalesce(
-            F.col("_early"),
-            F.when(F.col("_rn") > 1, F.lit("exact_dup")),
-        ),
-    ).drop("_early", "_rn")
+    df = df.withColumn("_rn", c["digest_rank"])
+    df = df.withColumn("drop_reason", c["exact_dup"]).drop("_early", "_rn")
 
     # near-dup: LSH pairs + CC over the current survivors only.
     # Keep a handle on the EXACT frame that is persisted: df rebinds
@@ -238,7 +225,7 @@ def flag_documents(docs, cfg, benchmark=None):
     # silently miss this cache and leak it for the session lifetime.
     cached = df.persist()
     df = cached
-    surv = df.where(F.col("drop_reason").isNull()).select("doc_id", "text")
+    surv = df.where(c["kept"]).select("doc_id", "text")
     # checkpoint_banded: the pair self-join otherwise runs the whole
     # signature pipeline (shingle explode over full text, 16 MIN
     # aggregates, band hashing) twice over the survivor set; the
@@ -252,16 +239,12 @@ def flag_documents(docs, cfg, benchmark=None):
     )
     losers = (
         connected_components(pairs)
-        .where(F.col("node") != F.col("comp"))
-        .select(F.col("node").alias("doc_id"))
-        .withColumn("_near_dup", F.lit(True))
+        .where(c["not_root"])
+        .select(c["node_id"])
+        .withColumn("_near_dup", c["true"])
     )
     df = df.join(losers, "doc_id", "left").withColumn(
-        "drop_reason",
-        F.coalesce(
-            F.col("drop_reason"),
-            F.when(F.col("_near_dup"), F.lit("near_dup")),
-        ),
+        "drop_reason", c["near_dup"]
     ).drop("_near_dup")
 
     # decontamination: any shared word-n-gram with the benchmark
@@ -269,23 +252,69 @@ def flag_documents(docs, cfg, benchmark=None):
     if benchmark is not None:
         dirty = (
             decontaminate(
-                df.where(F.col("drop_reason").isNull())
-                .select("doc_id", "text"),
+                df.where(c["kept"]).select("doc_id", "text"),
                 benchmark.select("text"),
                 n=cfg.decontam_ngram,
             )
-            .where(F.col("contaminated"))
+            .where("contaminated")
             .select("doc_id")
-            .withColumn("_contam", F.lit(True))
+            .withColumn("_contam", c["true"])
         )
         df = df.join(dirty, "doc_id", "left").withColumn(
-            "drop_reason",
-            F.coalesce(
-                F.col("drop_reason"),
-                F.when(F.col("_contam"), F.lit("contaminated")),
-            ),
+            "drop_reason", c["contam"]
         ).drop("_contam")
     return df, cached
+
+
+@const_expr
+def _flag_columns(langs, min_quality, ml_min_score, max_dup_frac,
+                  max_bullet_frac, max_ellipsis_frac) -> dict:
+    """The constant expressions of :func:`flag_documents`; the ML
+    quality stage is on when ``ml_min_score`` is not None."""
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
+    early = F.when(
+        ~F.col("lang_detected").isin(list(langs)) if langs else F.lit(False),
+        F.lit("lang"),
+    ).when(
+        F.col("q_score") < min_quality, F.lit("quality")
+    )
+    if ml_min_score is not None:
+        early = early.when(
+            F.col("ml_q_score") < ml_min_score, F.lit("ml_quality")
+        )
+    early = early.when(
+        F.col("dup_ngram_char_frac") > max_dup_frac, F.lit("repetition")
+    ).when(
+        # Gopher format caps: mostly-bulleted or ellipsis-heavy pages
+        # are list/teaser chrome, not prose
+        (F.col("bullet_line_frac") > max_bullet_frac)
+        | (F.col("ellipsis_line_frac") > max_ellipsis_frac),
+        F.lit("format"),
+    )
+    w = Window.partitionBy(F.md5(F.col("text"))).orderBy(
+        F.col("_early").isNotNull().cast("int").asc(), F.col("doc_id").asc()
+    )
+
+    def unless_dropped(flag, reason):
+        return F.coalesce(
+            F.col("drop_reason"), F.when(F.col(flag), F.lit(reason))
+        )
+
+    return {
+        "early": early,
+        "digest_rank": F.row_number().over(w),
+        "exact_dup": F.coalesce(
+            F.col("_early"), F.when(F.col("_rn") > 1, F.lit("exact_dup"))
+        ),
+        "kept": F.col("drop_reason").isNull(),
+        "not_root": F.col("node") != F.col("comp"),
+        "node_id": F.col("node").alias("doc_id"),
+        "true": F.lit(True),
+        "near_dup": unless_dropped("_near_dup", "near_dup"),
+        "contam": unless_dropped("_contam", "contaminated"),
+    }
 
 
 def run_curation(spark, docs, cfg, benchmark=None, out_root=None,
@@ -296,7 +325,6 @@ def run_curation(spark, docs, cfg, benchmark=None, out_root=None,
     micro-batch form writes each batch to its own
     ``ingest_batch=<id>`` subdirectory)."""
     from pyspark.sql import Observation
-    from pyspark.sql import functions as F
 
     from content_extractor_spark.operators.curation import (
         normalize_text,
@@ -306,12 +334,9 @@ def run_curation(spark, docs, cfg, benchmark=None, out_root=None,
 
     flagged, cached = flag_documents(docs, cfg, benchmark=benchmark)
     obs = Observation("curation_funnel")
-    aggs = [F.count(F.lit(1)).alias("total")] + [
-        F.sum((F.col("drop_reason") == r).cast("long")).alias(f"drop_{r}")
-        for r in DROP_REASONS
-    ]
+    aggs, kept = _funnel_columns()
     observed = flagged.observe(obs, *aggs)
-    curated = observed.where(F.col("drop_reason").isNull())
+    curated = observed.where(kept)
     curated = normalize_text(curated)
     curated = pii_scrub(curated, text_col="text_norm")
     curated = train_val_split(curated, val_pct=cfg.val_pct)
@@ -333,6 +358,18 @@ def run_curation(spark, docs, cfg, benchmark=None, out_root=None,
     )
     cached.unpersist()
     return metrics
+
+
+@const_expr
+def _funnel_columns():
+    """``(funnel observation aggregates, keep predicate)``."""
+    from pyspark.sql import functions as F
+
+    aggs = (F.count(F.lit(1)).alias("total"),) + tuple(
+        F.sum((F.col("drop_reason") == r).cast("long")).alias(f"drop_{r}")
+        for r in DROP_REASONS
+    )
+    return aggs, F.col("drop_reason").isNull()
 
 
 def run_curation_stream(

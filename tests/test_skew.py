@@ -167,3 +167,27 @@ def test_cdx_digest_dedup_is_aggregate_not_window(spark):
     got = {r["digest"]: r["urlkey"] for r in sel.collect()}
     # sha1:X ties on ts between k/b and k/c -> urlkey ascending wins
     assert got == {"sha1:X": "k/b", "sha1:Y": "k/d"}
+
+
+def test_connected_components_mixed_endpoint_types(spark):
+    """int and bigint endpoints are cast to their common type (bigint)
+    before the adjacency is built; same-typed endpoints get no cast,
+    so the curation funnel's plan is unchanged."""
+    from content_extractor_spark.operators.components import (
+        connected_components,
+        with_common_endpoint_type,
+    )
+
+    rows = [(1, 2), (2, 3), (10, 11), (3, 1)]
+    mixed = spark.createDataFrame(rows, "a int, b bigint")
+    cast = with_common_endpoint_type(mixed, "a", "b")
+    assert cast.schema.simpleString() == "struct<a:bigint,b:bigint>"
+    labels = connected_components(mixed)
+    assert labels.schema.simpleString() == "struct<node:bigint,comp:bigint>"
+    comps = {r["node"]: r["comp"] for r in labels.collect()}
+    assert comps == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10}
+
+    same = spark.createDataFrame(rows, "a int, b int")
+    assert with_common_endpoint_type(same, "a", "b") is same
+    assert {r["node"]: r["comp"]
+            for r in connected_components(same).collect()} == comps
